@@ -12,6 +12,9 @@ test vectors, since /root/testdata has no chain-shaped tables):
 
 from __future__ import annotations
 
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -95,6 +98,24 @@ def _overlap_jobs(*thunks):
     from eth2dgraph_spark.pipeline._overlap import overlap_jobs
 
     return overlap_jobs(*thunks)
+
+
+def _in_scratch_dir(build):
+    """Decorator for the file-source stream gates: `build(spark, sf, tmp)`
+    gets a fresh scratch directory `tmp` for its landing files, stream
+    checkpoints and file sinks. The gate's result rows are materialized
+    (executor blocks, not files) and `tmp` is deleted before the gate
+    returns, so no call leaves anything in the temp dir."""
+
+    @functools.wraps(build)
+    def gate(spark, sf):
+        tmp = tempfile.mkdtemp(prefix=f"{build.__name__[2:]}_")
+        try:
+            return build(spark, sf, tmp).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return gate
 
 
 def _r6e(col):
@@ -1198,7 +1219,8 @@ def q_windowed_stream(spark, sf):  # the SAME tumbling-window aggregation as
     return execute_stream_to_batch(agg)
 
 
-def q_windowed_append(spark, sf):  # APPEND-mode watermark semantics,
+@_in_scratch_dir
+def q_windowed_append(spark, sf, tmp):  # APPEND-mode watermark semantics,
     # physically executed and cross-engine gated — the two effects
     # complete mode can't show: (1) LATE DROP: the LAST batch carries
     # injected duplicates of the earliest events (ts < Jan 3); (2)
@@ -1215,7 +1237,6 @@ def q_windowed_append(spark, sf):  # APPEND-mode watermark semantics,
     # ORIGINAL events only, filtered to windows closed by the final
     # watermark.
     import os
-    import tempfile
 
     from eth2dgraph_spark.streaming.windows import execute_stream_append
 
@@ -1225,7 +1246,6 @@ def q_windowed_append(spark, sf):  # APPEND-mode watermark semantics,
         "2024-01-20 00:00:00",
         "2024-01-03 00:00:00",
     )
-    tmp = tempfile.mkdtemp(prefix="windowed_append_")
     landing = os.path.join(tmp, "landing")
     b1 = ev.filter(F.col("ts") < cut1)
     b2 = ev.filter((F.col("ts") >= cut1) & (F.col("ts") < cut2))
@@ -2387,7 +2407,8 @@ def q_asset_cluster_reps(spark, sf):  # the full multimodal dedup POLICY
     )
 
 
-def q_audio_dedup_stream(spark, sf):  # incremental multimodal ingest
+@_in_scratch_dir
+def q_audio_dedup_stream(spark, sf, tmp):  # incremental multimodal ingest
     # PHYSICALLY EXECUTED as a foreachBatch stream over two ordered
     # micro-batches of ASSETS (multimodal.fingerprint_cross_pairs_stream):
     # per batch, clips are fingerprinted through the stdlib WAV codec and
@@ -2399,7 +2420,6 @@ def q_audio_dedup_stream(spark, sf):  # incremental multimodal ingest
     # clips that pair against H0. Oracle = the closed-form group joins
     # (pairs(B1,H0) = empty; pairs(B2, H0 ∪ B1) by group), n_shared=3.
     import os
-    import tempfile
     import time
 
     from eth2dgraph_spark.functions.wav import synthetic_clip_udf
@@ -2439,7 +2459,6 @@ def q_audio_dedup_stream(spark, sf):  # incremental multimodal ingest
             )
         )
     )
-    tmp = tempfile.mkdtemp(prefix="audio_dedup_stream_")
     landing = os.path.join(tmp, "landing")
 
     # repartition(1), NOT coalesce(1): coalesce collapses the synth
@@ -2481,7 +2500,8 @@ def q_audio_dedup_stream(spark, sf):  # incremental multimodal ingest
     return out.select("new_id", "hist_id", "n_shared")
 
 
-def q_image_dedup_stream(spark, sf):  # incremental IMAGE ingest PHYSICALLY
+@_in_scratch_dir
+def q_image_dedup_stream(spark, sf, tmp):  # incremental IMAGE ingest PHYSICALLY
     # EXECUTED as a foreachBatch stream (the stream-side sibling of
     # image_near_dups_jpeg, closing the modality asymmetry the audio/cross
     # streams left: fingerprint_cross_pairs_stream is fingerprinter-
@@ -2501,7 +2521,6 @@ def q_image_dedup_stream(spark, sf):  # incremental IMAGE ingest PHYSICALLY
     # H0 (the +100000/+200000 id shifts are multiples of 25, preserving
     # doc_id % 25).
     import os
-    import tempfile
     import time
 
     from eth2dgraph_spark.functions.jpeg import synthetic_jpeg_udf
@@ -2541,7 +2560,6 @@ def q_image_dedup_stream(spark, sf):  # incremental IMAGE ingest PHYSICALLY
             )
         )
     )
-    tmp = tempfile.mkdtemp(prefix="image_dedup_stream_")
     landing = os.path.join(tmp, "landing")
 
     # repartition(1), NOT coalesce(1): coalesce collapses the synth
@@ -2584,7 +2602,8 @@ def q_image_dedup_stream(spark, sf):  # incremental IMAGE ingest PHYSICALLY
     return out.select("new_id", "hist_id", "n_shared")
 
 
-def q_cross_dedup_stream(spark, sf):  # cross-corpus near-dup PHYSICALLY
+@_in_scratch_dir
+def q_cross_dedup_stream(spark, sf, tmp):  # cross-corpus near-dup PHYSICALLY
     # EXECUTED as a foreachBatch stream over two ordered micro-batches,
     # history growing per batch (pipeline/dedup.minhash_cross_pairs_stream):
     # batch 1 = mutated docs 0..24 + gibberish 450..474; batch 2 = mutated
@@ -2594,7 +2613,6 @@ def q_cross_dedup_stream(spark, sf):  # cross-corpus near-dup PHYSICALLY
     # the same signature/banding SQL as cross_dedup. Uncapped band join on
     # both sides (the cross_dedup cap-parity rule).
     import os
-    import tempfile
     import time
 
     from eth2dgraph_spark.pipeline.dedup import minhash_cross_pairs_stream
@@ -2632,7 +2650,6 @@ def q_cross_dedup_stream(spark, sf):  # cross-corpus near-dup PHYSICALLY
             )
         )
     )
-    tmp = tempfile.mkdtemp(prefix="cross_dedup_stream_")
     landing = os.path.join(tmp, "landing")
     # overlap the three independent setup jobs (guide §2.6): both landing
     # writes and the H0 feature build (signature + shingle set for the
@@ -3087,7 +3104,8 @@ def q_token_mix(spark, sf):  # token-budgeted source mixing (the "train on
     return out.select("doc_id", "source", "n_tokens_ws")
 
 
-def q_stream_join(spark, sf):  # watermarked STREAM-STREAM join physically
+@_in_scratch_dir
+def q_stream_join(spark, sf, tmp):  # watermarked STREAM-STREAM join physically
     # executed (the windowed_append sibling): purchases joined to views of
     # the same user within +/-12h, each side arriving as two ordered
     # micro-batches (file source, maxFilesPerTrigger=1, pinned mtimes).
@@ -3098,7 +3116,6 @@ def q_stream_join(spark, sf):  # watermarked STREAM-STREAM join physically
     # with real symmetric stream state, not a batch rewrite; the unit
     # suite covers the eviction/outer-emission semantics.
     import os
-    import tempfile
     import time as _time
 
     from eth2dgraph_spark.streaming.windows import (
@@ -3108,7 +3125,6 @@ def q_stream_join(spark, sf):  # watermarked STREAM-STREAM join physically
 
     ev = _t(spark, sf, "events").select("event_id", "ts", "user_id", "event_type")
     cut = "2024-01-16 00:00:00"
-    tmp = tempfile.mkdtemp(prefix="stream_join_")
     sides = {
         "l": ev.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("l_id")
@@ -5488,7 +5504,7 @@ def oracle_sql() -> dict[str, str]:
                    n AS n_json, chars AS chars_json, fp AS texts_fp_json
             FROM a""",
         # two unrolled peel rounds; u < v canonicalization matches
-        # _canonical_undirected + least/greatest in graph.k_core
+        # _simple_undirected in graph.k_core
         "coreness_capped": _coreness_oracle(max_k=4, rounds=2),
         "kcore_2rounds": """
             WITH e AS (SELECT DISTINCT least('c' || o_custkey, 's' || l_suppkey) AS u,

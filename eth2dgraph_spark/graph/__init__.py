@@ -15,15 +15,66 @@ and the traversal/analytics kernels are iterative DataFrame programs:
     lineage truncated per iteration with localCheckpoint.
   - degrees / k_hop: one-shuffle primitives.
 
+Small-graph switch: at or below `_DRIVER_MAX_EDGES` edges,
+connected_components, pagerank, k_core and coreness collect their edge
+list once and run the same algorithm on the driver (union-find or numpy),
+returning the result through an Arrow createDataFrame. That path is
+EAGER — the edges are collected when the function is called, not when
+the returned frame is consumed — and it makes no lineage cuts, so
+`checkpoint_dir` only applies above the switch. Why: every round of a
+distributed iterative kernel pays at least one Spark job, whose planning
+and scheduling floor dwarfs the per-round compute on a small graph, while
+1M string pairs are tens of MB on the driver (the bounded-collect
+budget). Above the switch the distributed loops run unchanged; tests pin
+both paths equal by setting the constant to 0, which forces the
+distributed path.
+
 All kernels take string vertex ids; ordering uses lexicographic min, which
 only needs to be total for correctness.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+# At or below this many edges the kernels that read it run on the driver
+# (module docstring). Measured for connected_components in r14; 0 forces
+# every graph onto the distributed path.
+_DRIVER_MAX_EDGES = 1_000_000
+
+
+def _on_driver(n_edges: int) -> bool:
+    """True when a graph of `n_edges` edges takes the driver path."""
+    return 0 < _DRIVER_MAX_EDGES and n_edges <= _DRIVER_MAX_EDGES
+
+
+def _collect_small(e: DataFrame) -> "pd.DataFrame | None":
+    """`e` collected through Arrow when it has at most `_DRIVER_MAX_EDGES`
+    rows, else None. One bounded collect both decides and fetches: a count
+    first would cost its own jobs (several under AQE) on every small
+    graph, while above the switch the discarded collect is bounded by the
+    switch itself."""
+    if _DRIVER_MAX_EDGES <= 0:
+        return None
+    pdf = e.limit(_DRIVER_MAX_EDGES + 1).toPandas()
+    return pdf if len(pdf) <= _DRIVER_MAX_EDGES else None
+
+
+def _factorize(*cols: np.ndarray) -> "tuple[list[np.ndarray], np.ndarray]":
+    """Integer codes 0..n-1 for the node ids in `cols` (one shared
+    dictionary, first-appearance order) and the id behind each code."""
+    codes, names = pd.factorize(np.concatenate(cols))
+    return np.split(codes, np.cumsum([len(c) for c in cols])[:-1]), names
+
+
+def _driver_frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """Driver-side result columns -> DataFrame through the Arrow path of
+    createDataFrame: pickled rows cost seconds near the switch's ceiling."""
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
 
 
 def _truncator(df: DataFrame, checkpoint_dir: "str | None"):
@@ -80,6 +131,18 @@ def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct undirected edge list as (u, v) with u != v."""
     e = edges.select(F.col(src).cast("string").alias("u"), F.col(dst).cast("string").alias("v"))
     return e.filter(F.col("u") != F.col("v")).distinct()
+
+
+def _simple_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph as distinct (u, v) pairs with u < v: an
+    input holding both (u, v) and (v, u) must count v as ONE neighbor of u.
+    One distinct, after orienting, is the only shuffle."""
+    e = edges.select(F.col(src).cast("string").alias("u"), F.col(dst).cast("string").alias("v"))
+    return (
+        e.filter(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
+    )
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -152,14 +215,14 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 20,
     checkpoint_dir: "str | None" = None,
-    collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) where component = lexicographic min node id of the
     component. Isolated vertices don't appear (no edges → no rows); union a
     vertices frame downstream if needed.
 
-    When the canonical edge count is <= `collect_threshold`, the pairs are
-    collected and union-find runs on the driver — the
+    When the canonical edge count is at or below the small-graph switch
+    (`_DRIVER_MAX_EDGES`, module docstring), the pairs are collected
+    eagerly and union-find runs on the driver — the
     minimum_spanning_forest contraction pattern (the bounded-collect
     class: 1M string pairs ~ tens of MB, the k-means / vocab collect
     budget), and for the same measured reason: every distributed star
@@ -175,8 +238,7 @@ def connected_components(
     UTF8String binary ordering (UTF-8 byte order = code-point order), so
     the representative is byte-identical. The count probe reads the
     already-persisted canonical frame — one cached job on the big-graph
-    path, where the distributed rounds below run unchanged. Pass
-    collect_threshold=0 to force the distributed path.
+    path, where the distributed rounds below run unchanged.
 
     Alternating star rounds; convergence detected with a cheap order-free
     fingerprint (count + xor of per-edge hashes) instead of a subtract().
@@ -186,7 +248,7 @@ def connected_components(
     fixpoint and doubled per-job plan depth, 2.5x SLOWER end to end (29 s vs
     11.6 s on dedup_clusters); per-round checkpointing wins."""
     e = _canonical_undirected(edges, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
-    if collect_threshold and e.count() <= collect_threshold:
+    if _on_driver(e.count()):
         rows = e.collect()
         e.unpersist()
         parent: dict[str, str] = {}
@@ -212,13 +274,8 @@ def connected_components(
                     seen.add(n)
                     nodes.append(n)
                     comps.append(find(n))
-        # pandas frame -> Arrow-path createDataFrame: the pickled-rows
-        # path costs seconds at the ~1M-row threshold ceiling
-        import pandas as pd
-
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"node": nodes, "component": comps}),
-            "node string, component string",
+        return _driver_frame(
+            edges.sparkSession, "node string, component string", node=nodes, component=comps
         )
     prev_fp = None
     for _ in range(max_iter):
@@ -443,6 +500,14 @@ def pagerank(
     checkpointed plan is now byte-identical. `stats`, if given a dict,
     receives {"iterations": k, "last_delta": d} for observability.
 
+    Small-graph path (module docstring): at or below `_DRIVER_MAX_EDGES`
+    edges the edge list is collected EAGERLY, at call time, and the same
+    power iteration runs in numpy — multi-edges carry weight, self-loops
+    count, dangling mass spreads uniformly, ranks start at 1/n, tol reads
+    the same L1 delta, and contributions sum in edge order with one
+    `np.bincount` per round. `checkpoint_dir` applies only above the
+    switch, where the distributed loop below runs.
+
     Iteration cost discipline (this is the part that matters at scale):
       - ONE action per iteration: the dangling-mass scalar is folded into
         the plan as a broadcast 1-row aggregate, so the eager checkpoint is
@@ -453,11 +518,16 @@ def pagerank(
         src, and persisted — the big side's shuffle happens once; only the
         small ranks side moves each iteration.
       - localCheckpoint truncates lineage so the plan stays O(1) deep."""
-    # persist the canonical edges: the upstream build (often a join) would
-    # otherwise re-run for every consumer below (ej AND nodes)
     e = edges.select(
         F.col(src).cast("string").alias("src"), F.col(dst).cast("string").alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    pdf = _collect_small(e)
+    # a null endpoint keeps the distributed path's own null handling
+    if pdf is not None and not pdf.isna().to_numpy().any():
+        return _pagerank_driver(e.sparkSession, pdf, num_iter, damping, tol, stats)
+    # persist the canonical edges: the upstream build (often a join) would
+    # otherwise re-run for every consumer below (ej AND nodes)
+    e = e.persist(StorageLevel.MEMORY_AND_DISK)
     # size every loop frame from the measured edge count (r14, guide
     # §2.2): the persisted frames' partition counts pin the per-round
     # join widths for the whole iteration, so a session-constant count
@@ -531,6 +601,40 @@ def pagerank(
     ej.unpersist()
     nodes.unpersist()
     return ranks.select("node", "rank")
+
+
+def _pagerank_driver(
+    spark: SparkSession,
+    pdf: pd.DataFrame,
+    num_iter: int,
+    damping: float,
+    tol: "float | None",
+    stats: "dict | None",
+) -> DataFrame:
+    """pagerank's small-graph path on the collected (src, dst) edges: the
+    distributed loop's update, term for term, over integer node codes."""
+    (s, d), names = _factorize(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+    n = len(names)
+    if n == 0:  # like the distributed path: empty result, stats untouched
+        return _driver_frame(spark, "node string, rank double", node=[], rank=[])
+    outdeg = np.bincount(s, minlength=n).astype(np.float64)
+    dangling = outdeg == 0
+    out_s = outdeg[s]
+    rank = np.full(n, 1.0 / n)
+    iterations, last_delta = 0, None
+    for _ in range(num_iter):
+        c = np.bincount(d, weights=rank[s] / out_s, minlength=n)
+        nxt = (1.0 - damping) / n + damping * (c + rank[dangling].sum() / float(n))
+        iterations += 1
+        if tol is not None:
+            last_delta = float(np.abs(nxt - rank).sum())
+        rank = nxt
+        if tol is not None and last_delta <= tol:
+            break
+    if stats is not None:
+        stats["iterations"] = iterations
+        stats["last_delta"] = last_delta
+    return _driver_frame(spark, "node string, rank double", node=names, rank=rank)
 
 
 def personalized_pagerank(
@@ -1012,7 +1116,6 @@ def minimum_spanning_forest(
     weight: str = "w",
     max_iter: int = 25,
     checkpoint_dir: "str | None" = None,
-    collect_threshold: int = 1_000_000,
     stats: "dict | None" = None,
 ) -> DataFrame:
     """Minimum spanning forest of the undirected graph — (u, v, w) rows,
@@ -1028,7 +1131,8 @@ def minimum_spanning_forest(
     Contraction merge strategy: Borůvka's min-edge clusters can be LONG
     CHAINS (a's min edge points at b, b's at c, ...), so the merge is a
     real connected-components problem, not one pointer hop. When the
-    round's picked-edge count is <= `collect_threshold`, the contraction
+    round's picked-edge count is at or below the small-graph switch
+    (`_DRIVER_MAX_EDGES`, module docstring), the contraction
     pairs are collected and union-find runs on the driver (the bounded-
     collect class: 1M pairs ~ tens of MB, same budget as the k-means /
     vocab collects elsewhere) — MEASURED 4.4x faster end-to-end than
@@ -1101,7 +1205,7 @@ def minimum_spanning_forest(
             .select("cu", "cv")
             .distinct()
         )
-        if n_picked <= collect_threshold:
+        if _on_driver(n_picked):
             # bounded driver-side union-find on the contraction pairs —
             # see the docstring's measured pair for why
             collected_rounds += 1
@@ -1695,11 +1799,7 @@ def label_propagation(
     (eager localCheckpoint) so lineage stays O(1), the
     connected_components discipline. The neighbor list is persisted once
     across rounds."""
-    e = (
-        _canonical_undirected(edges, src, dst)
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
+    e = _simple_undirected(edges, src, dst)
     nbrs0 = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1758,12 +1858,23 @@ def k_core(
     shrink), so iterations are bounded by the peel depth — max_iters is a
     backstop, and an extra round after convergence is the identity, which
     is what makes the fixed-2-round `kcore_2rounds` gate equal the
-    converged answer whenever the graph settles in fewer rounds."""
-    e = (
-        _canonical_undirected(edges, src, dst)
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
+    converged answer whenever the graph settles in fewer rounds.
+
+    Small-graph path (module docstring): at or below `_DRIVER_MAX_EDGES`
+    distinct pairs the pairs are collected EAGERLY, at call time, and the
+    same synchronous peel runs round for round in numpy (`_peel_driver`),
+    so it returns the distributed answer by construction.
+    `checkpoint_dir` applies only above the switch."""
+    e = _simple_undirected(edges, src, dst)
+    pdf = _collect_small(e)
+    if pdf is not None:
+        (u, v), names = _factorize(*_doubled(pdf))
+        u, v, _ = _peel_driver(u, v, len(names), k, max_iters, True)
+        deg = np.bincount(u, minlength=len(names))
+        alive = deg > 0
+        return _driver_frame(
+            e.sparkSession, "node string, degree long", node=names[alive], degree=deg[alive]
+        )
     cur = _truncator(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         checkpoint_dir,
@@ -1793,6 +1904,38 @@ def k_core(
     return cur.groupBy("u").agg(F.count(F.lit(1)).alias("degree")).select(
         F.col("u").alias("node"), "degree"
     )
+
+
+def _doubled(pdf: pd.DataFrame) -> "tuple[np.ndarray, np.ndarray]":
+    """The collected (u, v) pairs in both directions: the doubled edge list
+    the peel reads."""
+    u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+    return np.concatenate([u, v]), np.concatenate([v, u])
+
+
+def _peel_driver(
+    u: np.ndarray, v: np.ndarray, n: int, k: int, rounds: int, to_fixpoint: bool
+) -> "tuple[np.ndarray, np.ndarray, int | None]":
+    """Up to `rounds` synchronous peel rounds at threshold `k` over the
+    doubled edge list (u, v) of node codes < n — the distributed k_core /
+    coreness round exactly: degree, keep mask, drop every edge with a
+    dropped endpoint. `to_fixpoint` adds the distributed loop's stop rule
+    (the kept-node count repeats). Returns the surviving edges and the
+    last kept-node count (None when not counted)."""
+    prev = kept = None
+    for _ in range(rounds):
+        deg = np.bincount(u, minlength=n)
+        # absent nodes (degree 0) are never kept: the distributed degree
+        # table only has rows for nodes that still have an edge
+        keep = deg >= max(k, 1)
+        if to_fixpoint:
+            kept = int(keep.sum())
+            if kept == prev:
+                break
+            prev = kept
+        m = keep[u] & keep[v]
+        u, v = u[m], v[m]
+    return u, v, kept
 
 
 def coreness(
@@ -1829,14 +1972,19 @@ def coreness(
 
     At 100 TB the cost profile is the k_core loop's per layer: one degree
     aggregation + two semi-joins per round, all on the shrinking doubled
-    edge list; no driver state beyond loop counters."""
+    edge list; no driver state beyond loop counters.
+
+    Small-graph path (module docstring): at or below `_DRIVER_MAX_EDGES`
+    distinct pairs the pairs are collected EAGERLY, at call time, and the
+    layers below run round for round in numpy (`_peel_driver`), so exact
+    and capped mode both return the distributed answer by construction.
+    `checkpoint_dir` applies only above the switch."""
     if rounds_per_layer is not None and max_k is None:
         raise ValueError("rounds_per_layer requires max_k (fixed-shape mode)")
-    e = (
-        _canonical_undirected(edges, src, dst)
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
+    e = _simple_undirected(edges, src, dst)
+    pdf = _collect_small(e)
+    if pdf is not None:
+        return _coreness_driver(e.sparkSession, pdf, max_k, rounds_per_layer, max_iters)
     doubled = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # Both modes cut lineage per peel round. MEASURED AND REJECTED: running
     # fixed-shape mode fully lazy (no cuts, "let ReusedExchange handle it")
@@ -1908,6 +2056,36 @@ def coreness(
     return out.select(F.col("u").alias("node"), F.col("coreness").cast("long"))
 
 
+def _coreness_driver(
+    spark: SparkSession,
+    pdf: pd.DataFrame,
+    max_k: "int | None",
+    rounds_per_layer: "int | None",
+    max_iters: int,
+) -> DataFrame:
+    """coreness's small-graph path on the collected (u, v) pairs: the
+    distributed layer loop with each layer's rounds in `_peel_driver`."""
+    (u, v), names = _factorize(*_doubled(pdf))
+    n = len(names)
+    core = np.zeros(n, dtype=np.int64)
+    nodes_prev = np.ones(n, dtype=bool)  # every pair endpoint has degree >= 1
+    exact = rounds_per_layer is None
+    k = 1
+    while True:
+        k += 1
+        u, v, kept = _peel_driver(u, v, n, k, max_iters if exact else rounds_per_layer, exact)
+        if kept == 0:  # exact mode: k-core empty -> everyone left was (k-1)-core
+            core[nodes_prev] = k - 1
+            break
+        nodes_now = np.bincount(u, minlength=n) > 0
+        core[nodes_prev & ~nodes_now] = k - 1
+        nodes_prev = nodes_now
+        if max_k is not None and k == max_k:
+            core[nodes_now] = max_k
+            break
+    return _driver_frame(spark, "node string, coreness long", node=names, coreness=core)
+
+
 def modularity(
     edges: DataFrame,
     labels: DataFrame,
@@ -1937,12 +2115,7 @@ def modularity(
     # (often a join) runs three times (the dsir_logweights
     # materialize-then-release contract; measured on the modularity gate
     # at sf0.1: 9.8 -> 3.9 s)
-    e = (
-        _canonical_undirected(edges, src, dst)
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = _simple_undirected(edges, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
     lab = labels.select(
         F.col(node_col).cast("string").alias("n"), F.col(label_col).alias("l")
     )

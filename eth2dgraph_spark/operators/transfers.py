@@ -103,10 +103,3 @@ def decode_token_transfers(logs: DataFrame) -> DataFrame:
         F.col("tx_hash"),
         F.col("log_index"),
     )
-
-
-def transfer_logs(logs: DataFrame) -> DataFrame:
-    """S4: the predicate-pushed scan — filter logs to the Transfer topic; the
-    equality lands in PushedFilters at the Parquet scan when topics are stored
-    exploded (topic_0 column) — use explode_topics + partition layout for that."""
-    return logs.filter(F.get("topics", 0) == TRANSFER_TOPIC)

@@ -25,3 +25,23 @@ def test_all_queries_run_at_sf0001(spark):
         df = fn(spark, "/root/testdata/sf0.001")
         n = df.count()
         assert n >= 0, name
+
+
+def test_scratch_dir_gates_leave_nothing_behind(spark):
+    """A file-source stream gate's scratch dir is gone when the gate
+    returns, and its result rows stay readable without it."""
+    import os
+
+    seen = []
+
+    @entry_mod._in_scratch_dir
+    def q_probe(spark, sf, tmp):
+        seen.append(tmp)
+        out = os.path.join(tmp, "sink")
+        spark.range(5).write.parquet(out)
+        return spark.read.parquet(out)
+
+    df = q_probe(spark, "unused")
+    assert not os.path.exists(seen[0])
+    assert os.path.basename(seen[0]).startswith("probe_")
+    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3, 4]

@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+import eth2dgraph_spark.graph as G
 from eth2dgraph_spark.graph import (
     connected_components,
     dedup_by_clusters,
@@ -21,6 +22,28 @@ from eth2dgraph_spark.graph import (
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Small-graph switch at 0: every kernel takes its distributed path."""
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
+
+
+def _no_rounds(*_a, **_k):
+    raise AssertionError("a distributed round ran on the driver path")
+
+
+def _driver_and_distributed(monkeypatch, run):
+    """run() below the small-graph switch (asserting no distributed round
+    cuts lineage), then with the switch at 0; `run` must collect."""
+    with monkeypatch.context() as m:
+        m.setattr(G, "_truncator", _no_rounds)
+        fast = run()
+    with monkeypatch.context() as m:
+        m.setattr(G, "_DRIVER_MAX_EDGES", 0)
+        slow = run()
+    return fast, slow
 
 
 def test_connected_components_two_components(spark):
@@ -42,21 +65,19 @@ def test_connected_components_long_chain_converges(spark):
     assert {r["component"] for r in got} == {"n000"}
 
 
-def test_connected_components_driver_path_equals_distributed(spark):
-    # the collect_threshold union-find fast path (r14) must be
-    # row-identical to the distributed star rounds — exercised on a graph
-    # with chains, a star hub, duplicate/reversed edges and self-loops
+def test_connected_components_driver_path_equals_distributed(spark, monkeypatch):
+    # the small-graph union-find path (r14) must be row-identical to the
+    # distributed star rounds — exercised on a graph with chains, a star
+    # hub, duplicate/reversed edges and self-loops
     edges = (
         [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)]
         + [("hub", f"leaf{i}") for i in range(9)]
         + [("q1", "q2"), ("q2", "q1"), ("q3", "q3"), ("q3", "q4")]
     )
     e = _edges(spark, edges)
-    fast = {(r["node"], r["component"]) for r in connected_components(e).collect()}
-    slow = {
-        (r["node"], r["component"])
-        for r in connected_components(e, collect_threshold=0).collect()
-    }
+    fast, slow = _driver_and_distributed(
+        monkeypatch, lambda: {tuple(r) for r in connected_components(e).collect()}
+    )
     assert fast == slow
     assert ("q3", "q3") in fast  # self-loop alone must not isolate q3-q4
 
@@ -157,6 +178,58 @@ def test_pagerank_tol_early_exit(spark):
     r3 = {r["node"]: r["rank"] for r in pagerank(e2, num_iter=15, tol=0.05, stats=st3).collect()}
     assert 2 < st3["iterations"] < 15
     assert math.isclose(sum(r3.values()), 1.0, rel_tol=1e-6)
+
+
+def test_pagerank_driver_path_equals_distributed(spark, monkeypatch):
+    """The small-graph numpy iteration must reproduce the distributed
+    power iteration: dangling nodes, duplicate edges (weight 2), a
+    self-loop, plain and tol mode with stats, and empty input."""
+    e = _edges(
+        spark,
+        [("a", "b"), ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "c"),
+         ("c", "d"), ("d", "e"), ("x", "y"), ("y", "z")],
+    )
+
+    def run(**kw):
+        st: dict = {}
+        ranks = {r["node"]: r["rank"] for r in pagerank(e, stats=st, **kw).collect()}
+        return ranks, st
+
+    for kw in ({"num_iter": 7}, {"num_iter": 40, "tol": 1e-6}):
+        (fast, fst), (slow, sst) = _driver_and_distributed(monkeypatch, lambda: run(**kw))
+        assert set(fast) == set(slow) == set("abcdexyz")
+        for n in fast:
+            assert fast[n] == pytest.approx(slow[n], abs=1e-12), (kw, n)
+        assert fst["iterations"] == sst["iterations"]
+        if "tol" in kw:
+            assert 1 < fst["iterations"] < kw["num_iter"]
+            assert fst["last_delta"] == pytest.approx(sst["last_delta"], abs=1e-12)
+        else:
+            assert fst["last_delta"] is sst["last_delta"] is None
+
+    empty = _edges(spark, [])
+    fast, slow = _driver_and_distributed(
+        monkeypatch, lambda: pagerank(empty, stats={}).collect()
+    )
+    assert fast == slow == []
+
+
+def test_small_graph_switch_boundary(spark, monkeypatch):
+    """The bounded collect decides the path: a graph at the switch runs on
+    the driver, one edge over it runs the distributed rounds."""
+    from eth2dgraph_spark.graph import coreness, k_core
+
+    e = _edges(spark, [(f"a{i}", f"a{i + 1}") for i in range(6)])
+    cuts = []
+    real = G._truncator
+    monkeypatch.setattr(G, "_truncator", lambda df, ck: cuts.append(1) or real(df, ck))
+    for kernel in (lambda: pagerank(e, num_iter=2), lambda: k_core(e, k=1),
+                   lambda: coreness(e)):
+        for switch, over in ((6, False), (5, True)):
+            monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", switch)
+            cuts.clear()
+            kernel().collect()
+            assert bool(cuts) == over, switch
 
 
 def test_ppr_mass_stays_near_sources(spark):
@@ -337,11 +410,12 @@ def test_label_propagation_known_and_reference(spark):
         assert got == ref(pairs, iters), iters
 
 
-def test_reliable_checkpoint_results_identical(spark, tmp_path):
+def test_reliable_checkpoint_results_identical(spark, tmp_path, distributed):
     """checkpoint_dir= switches every per-iteration lineage cut from
     localCheckpoint to a reliable checkpoint (cluster fault-tolerance);
     results must be identical for all four iterative kernels, and the
-    directory must actually receive checkpoint data."""
+    directory must actually receive checkpoint data. The small-graph
+    switch is off: its driver path makes no lineage cuts at all."""
     import random
 
     from eth2dgraph_spark.graph import (
@@ -410,7 +484,7 @@ def test_same_checkpoint_dir_compares_path_components():
     assert not same("hdfs://a:8020/d/ck/u", "hdfs://b:8020/d/ck")
 
 
-def test_k_core_known_graph_and_reference(spark):
+def test_k_core_known_graph_and_reference(spark, monkeypatch):
     """Triangle + pendant chain: the 2-core is exactly the triangle (each
     triangle vertex has degree 2 inside it); randomized graphs pin the
     fixpoint against a pure-Python peeler; k=1 keeps everything."""
@@ -452,16 +526,18 @@ def test_k_core_known_graph_and_reference(spark):
             assert got == ref_kcore(pairs, k), (trial, k)
 
     # reliable-checkpoint parity (the _truncator contract, same as the
-    # other four kernels)
+    # other four kernels) — on the distributed path, the only one that
+    # cuts lineage
     import tempfile
 
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
     with tempfile.TemporaryDirectory() as ck:
         a = {tuple(r) for r in k_core(e, k=2).collect()}
         b = {tuple(r) for r in k_core(e, k=2, checkpoint_dir=ck).collect()}
         assert a == b
 
 
-def test_coreness_known_graph_and_reference(spark):
+def test_coreness_known_graph_and_reference(spark, monkeypatch):
     """Triangle + pendant chain: triangle vertices have coreness 2, the
     chain coreness 1. Randomized graphs pin exact (fixpoint) coreness
     against a pure-Python layered peeler; the capped fixed-shape mode
@@ -524,13 +600,73 @@ def test_coreness_known_graph_and_reference(spark):
     with _pytest.raises(ValueError):
         coreness(e, rounds_per_layer=2)
 
-    # reliable-checkpoint parity (the _truncator contract)
+    # reliable-checkpoint parity (the _truncator contract) — on the
+    # distributed path, the only one that cuts lineage
     import tempfile
 
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
     with tempfile.TemporaryDirectory() as ck:
         a = {tuple(r) for r in coreness(e).collect()}
         b = {tuple(r) for r in coreness(e, checkpoint_dir=ck).collect()}
         assert a == b
+
+
+def test_k_core_driver_path_equals_distributed(spark, monkeypatch):
+    """The small-graph numpy peel must return the distributed k-core,
+    degrees included, on graphs with duplicate/reversed edges and
+    self-loops, for k below, at and above the degeneracy."""
+    import random
+
+    from eth2dgraph_spark.graph import k_core
+
+    rng = random.Random(7)
+    pairs = [(f"n{rng.randint(0, 24)}", f"n{rng.randint(0, 24)}") for _ in range(70)]
+    pairs += [("n1", "n2"), ("n2", "n1"), ("n3", "n3")]
+    e = _edges(spark, pairs)
+    for k in (1, 2, 3, 4, 9):
+        fast, slow = _driver_and_distributed(
+            monkeypatch, lambda: {tuple(r) for r in k_core(e, k=k).collect()}
+        )
+        assert fast == slow, k
+    empty = _edges(spark, [])
+    fast, slow = _driver_and_distributed(monkeypatch, lambda: k_core(empty).collect())
+    assert fast == slow == []
+
+
+def test_coreness_driver_path_equals_distributed(spark, monkeypatch):
+    """The small-graph numpy peel must return the distributed coreness in
+    exact mode and in capped mode — including rounds_per_layer below the
+    peel depth, where truncation leaves a layer unsettled."""
+    import random
+
+    from eth2dgraph_spark.graph import coreness
+
+    # a 5-clique with a 6-node tail: the tail needs 6 rounds to peel at
+    # k=2, so one round per layer truncates
+    clique = [(f"k{i}", f"k{j}") for i in range(5) for j in range(i + 1, 5)]
+    tail = [("k0", "t0")] + [(f"t{i}", f"t{i + 1}") for i in range(5)]
+    rng = random.Random(11)
+    noise = [(f"r{rng.randint(0, 14)}", f"r{rng.randint(0, 14)}") for _ in range(30)]
+    e = _edges(spark, clique + tail + noise + [("k1", "k0"), ("t2", "t2")])
+
+    def run(**kw):
+        return {tuple(r) for r in coreness(e, **kw).collect()}
+
+    cases = ({}, {"max_k": 3}, {"max_k": 4, "rounds_per_layer": 1},
+             {"max_k": 5, "rounds_per_layer": 2})
+    got = {}
+    for kw in cases:
+        fast, slow = _driver_and_distributed(monkeypatch, lambda: run(**kw))
+        assert fast == slow, kw
+        got[tuple(kw.items())] = dict(fast)
+    empty = _edges(spark, [])
+    fast, slow = _driver_and_distributed(monkeypatch, lambda: coreness(empty).collect())
+    assert fast == slow == []
+    exact = got[()]
+    truncated = got[(("max_k", 4), ("rounds_per_layer", 1))]
+    # the truncation is real: the unsettled tail keeps labels above its
+    # exact coreness of 1
+    assert exact["t3"] == 1 and truncated["t3"] > 1
 
 
 def test_modularity_known_values_and_reference(spark):
@@ -986,8 +1122,8 @@ def test_single_linkage_clusters_threshold_sweep(spark):
     assert at0 == []  # every edge cut -> all nodes isolated -> absent
 
 
-def test_msf_distributed_contraction_branch_equal(spark):
-    """collect_threshold=0 forces the distributed star-CC contraction
+def test_msf_distributed_contraction_branch_equal(spark, monkeypatch):
+    """The small-graph switch at 0 forces the distributed star-CC contraction
     merge on every round; the forest must equal the (default)
     driver-union-find path exactly — the two branches are
     interchangeable merge strategies, not different algorithms."""
@@ -1004,11 +1140,12 @@ def test_msf_distributed_contraction_branch_equal(spark):
     raw = [(u, v, w) for u, v, w in raw if u != v]
     e = spark.createDataFrame(raw, "src string, dst string, w double")
     fast = {tuple(r) for r in minimum_spanning_forest(e).collect()}
-    dist = {tuple(r) for r in minimum_spanning_forest(e, collect_threshold=0).collect()}
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
+    dist = {tuple(r) for r in minimum_spanning_forest(e).collect()}
     assert fast == dist and len(fast) > 0
 
 
-def test_shortest_paths_and_msf_stats(spark):
+def test_shortest_paths_and_msf_stats(spark, monkeypatch):
     """The observability contract: stats reports executed rounds and
     convergence; MSF also reports which contraction-merge branch ran."""
     from eth2dgraph_spark.graph import minimum_spanning_forest, shortest_paths
@@ -1028,7 +1165,8 @@ def test_shortest_paths_and_msf_stats(spark):
     minimum_spanning_forest(e, stats=st3).collect()
     assert st3["rounds"] >= 1 and st3["collected_rounds"] == st3["rounds"]
     st4: dict = {}
-    minimum_spanning_forest(e, collect_threshold=0, stats=st4).collect()
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
+    minimum_spanning_forest(e, stats=st4).collect()
     assert st4["collected_rounds"] == 0 and st4["rounds"] >= 1
 
 

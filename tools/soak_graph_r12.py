@@ -26,9 +26,16 @@
    rounds and return identical target dists — the measured saving that
    justifies the two extra per-round driver actions.
 
+3. DISTRIBUTED pagerank / coreness: below graph._DRIVER_MAX_EDGES both
+   kernels run on the driver, so a benchmark-sized graph never reaches
+   their distributed loops. These ops set the switch to 0 and time the
+   distributed path on the zipfian graph, the path every graph above the
+   switch takes, so it stays measured at scale.
+
 Usage: python tools/soak_graph_r12.py
        SOAK_N=2000000 SOAK_M=4000000 SOAK_ALPHAS=1.1,1.5
-       SOAK_OPS=sssp,msf,harmonic,betweenness,betweenness_weighted,targeted
+       SOAK_OPS=sssp,msf,harmonic,betweenness,betweenness_weighted,targeted,
+                pagerank,coreness
 """
 
 from __future__ import annotations
@@ -49,7 +56,7 @@ from eth2dgraph_spark.session import get_spark  # noqa: E402
 N = int(os.environ.get("SOAK_N", "2000000"))
 M = int(os.environ.get("SOAK_M", "4000000"))
 ALPHAS = [float(x) for x in os.environ.get("SOAK_ALPHAS", "1.1,1.5").split(",")]
-OPS = os.environ.get("SOAK_OPS", "sssp,msf,harmonic,targeted").split(",")
+OPS = os.environ.get("SOAK_OPS", "sssp,msf,harmonic,targeted,pagerank,coreness").split(",")
 
 
 def zipf_edges(spark, n: int, m: int, alpha: float):
@@ -105,9 +112,12 @@ def chain_edges(spark, n: int):
 
 
 def main() -> None:
+    import eth2dgraph_spark.graph as G
     from eth2dgraph_spark.graph import (
+        coreness,
         harmonic_closeness_sampled,
         minimum_spanning_forest,
+        pagerank,
         shortest_paths,
         shortest_paths_targeted,
     )
@@ -195,6 +205,24 @@ def main() -> None:
                 f"# alpha={alpha} betweenness_weighted: {rec['betweenness_weighted']}",
                 file=sys.stderr,
             )
+        # the distributed path: small-graph switch at 0 (tool docstring, 3.)
+        driver_max, G._DRIVER_MAX_EDGES = G._DRIVER_MAX_EDGES, 0
+        try:
+            if "pagerank" in OPS:
+                st5: dict = {}
+                t0 = time.time()
+                cnt = pagerank(edges, num_iter=10, tol=1e-9, stats=st5).count()
+                rec["pagerank"] = {"wall_s": round(time.time() - t0, 2), "nodes": cnt, **st5}
+                print(f"# alpha={alpha} pagerank: {rec['pagerank']}", file=sys.stderr)
+            if "coreness" in OPS:
+                t0 = time.time()
+                core = coreness(edges).groupBy().agg(
+                    F.count(F.lit(1)).alias("nodes"), F.max("coreness").alias("degeneracy")
+                ).first()
+                rec["coreness"] = {"wall_s": round(time.time() - t0, 2), **core.asDict()}
+                print(f"# alpha={alpha} coreness: {rec['coreness']}", file=sys.stderr)
+        finally:
+            G._DRIVER_MAX_EDGES = driver_max
         out["alphas"][str(alpha)] = rec
         spark.stop()
 
