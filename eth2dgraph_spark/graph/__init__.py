@@ -47,21 +47,26 @@ from pyspark.storagelevel import StorageLevel
 _DRIVER_MAX_EDGES = 1_000_000
 
 
-def _on_driver(n_edges: int) -> bool:
-    """True when a graph of `n_edges` edges takes the driver path."""
-    return 0 < _DRIVER_MAX_EDGES and n_edges <= _DRIVER_MAX_EDGES
-
-
 def _collect_small(e: DataFrame) -> "pd.DataFrame | None":
-    """`e` collected through Arrow when it has at most `_DRIVER_MAX_EDGES`
-    rows, else None. One bounded collect both decides and fetches: a count
-    first would cost its own jobs (several under AQE) on every small
-    graph, while above the switch the discarded collect is bounded by the
-    switch itself."""
+    """Persist `e`; when it has at most `_DRIVER_MAX_EDGES` rows, collect
+    it through Arrow and release it, else return None and leave it
+    persisted for the caller's distributed path to read and unpersist.
+
+    One bounded collect both decides and fetches: a count first would cost
+    its own jobs (several under AQE) on every small graph. Persisting
+    first means the probe fills the cache the distributed loop then
+    reads, so above the switch `e`'s upstream (a join, a distinct
+    shuffle) still runs once; what the big-graph path pays extra is
+    shipping the switch's worth of rows to the driver and dropping them
+    (measured in OPTIMIZATION_r15.md)."""
+    e.persist(StorageLevel.MEMORY_AND_DISK)
     if _DRIVER_MAX_EDGES <= 0:
         return None
     pdf = e.limit(_DRIVER_MAX_EDGES + 1).toPandas()
-    return pdf if len(pdf) <= _DRIVER_MAX_EDGES else None
+    if len(pdf) > _DRIVER_MAX_EDGES:
+        return None
+    e.unpersist()
+    return pdf
 
 
 def _factorize(*cols: np.ndarray) -> "tuple[list[np.ndarray], np.ndarray]":
@@ -236,9 +241,9 @@ def connected_components(
     ceiling (pickled rows cost seconds). Lexicographic min on Python
     str equals Spark's
     UTF8String binary ordering (UTF-8 byte order = code-point order), so
-    the representative is byte-identical. The count probe reads the
-    already-persisted canonical frame — one cached job on the big-graph
-    path, where the distributed rounds below run unchanged.
+    the representative is byte-identical. The size probe is
+    `_collect_small`'s bounded collect of the persisted canonical frame;
+    above the switch the distributed rounds below start from that cache.
 
     Alternating star rounds; convergence detected with a cheap order-free
     fingerprint (count + xor of per-edge hashes) instead of a subtract().
@@ -247,10 +252,10 @@ def connected_components(
     the paired variant ran up to 2 extra star rounds before detecting the
     fixpoint and doubled per-job plan depth, 2.5x SLOWER end to end (29 s vs
     11.6 s on dedup_clusters); per-round checkpointing wins."""
-    e = _canonical_undirected(edges, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
-    if _on_driver(e.count()):
-        rows = e.collect()
-        e.unpersist()
+    e = _canonical_undirected(edges, src, dst)
+    pdf = _collect_small(e)
+    if pdf is not None:
+        rows = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -521,13 +526,16 @@ def pagerank(
     e = edges.select(
         F.col(src).cast("string").alias("src"), F.col(dst).cast("string").alias("dst")
     )
+    # the probe leaves the edges persisted on the distributed path: the
+    # upstream build (often a join) would otherwise re-run for every
+    # consumer below (ej AND nodes)
     pdf = _collect_small(e)
-    # a null endpoint keeps the distributed path's own null handling
-    if pdf is not None and not pdf.isna().to_numpy().any():
-        return _pagerank_driver(e.sparkSession, pdf, num_iter, damping, tol, stats)
-    # persist the canonical edges: the upstream build (often a join) would
-    # otherwise re-run for every consumer below (ej AND nodes)
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    if pdf is not None:
+        if not pdf.isna().to_numpy().any():
+            return _pagerank_driver(e.sparkSession, pdf, num_iter, damping, tol, stats)
+        # a null endpoint keeps the distributed path's own null handling;
+        # the probe released the frame, so pin it again
+        e.persist(StorageLevel.MEMORY_AND_DISK)
     # size every loop frame from the measured edge count (r14, guide
     # §2.2): the persisted frames' partition counts pin the per-round
     # join widths for the whole iteration, so a session-constant count
@@ -1205,7 +1213,8 @@ def minimum_spanning_forest(
             .select("cu", "cv")
             .distinct()
         )
-        if _on_driver(n_picked):
+        # n_picked > 0 here, so a switch of 0 forces the distributed merge
+        if n_picked <= _DRIVER_MAX_EDGES:
             # bounded driver-side union-find on the contraction pairs —
             # see the docstring's measured pair for why
             collected_rounds += 1
@@ -1879,6 +1888,7 @@ def k_core(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         checkpoint_dir,
     )
+    e.unpersist()  # the probe's cache; cur is materialized
     prev_n: "int | None" = None
     for _ in range(max_iters):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
@@ -1993,6 +2003,7 @@ def coreness(
     # 3x2-block gate went 60s -> 600s+ timeout at sf0.01. The per-round
     # localCheckpoint is what keeps the plan linear in rounds.
     cur = _truncator(doubled, checkpoint_dir)
+    e.unpersist()  # the probe's cache; cur is materialized
     nodes_prev = cur.select("u").distinct()
     layers: "list[DataFrame]" = []
     k = 1

@@ -216,20 +216,32 @@ def test_pagerank_driver_path_equals_distributed(spark, monkeypatch):
 
 def test_small_graph_switch_boundary(spark, monkeypatch):
     """The bounded collect decides the path: a graph at the switch runs on
-    the driver, one edge over it runs the distributed rounds."""
+    the driver, one edge over it runs the distributed rounds from the
+    probe's cache. Both give the same answer and leave nothing cached."""
     from eth2dgraph_spark.graph import coreness, k_core
 
     e = _edges(spark, [(f"a{i}", f"a{i + 1}") for i in range(6)])
     cuts = []
     real = G._truncator
     monkeypatch.setattr(G, "_truncator", lambda df, ck: cuts.append(1) or real(df, ck))
-    for kernel in (lambda: pagerank(e, num_iter=2), lambda: k_core(e, k=1),
-                   lambda: coreness(e)):
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    kernels = {
+        "pagerank": lambda: {r["node"]: pytest.approx(r["rank"], abs=1e-12)
+                             for r in pagerank(e, num_iter=2).collect()},
+        "k_core": lambda: set(map(tuple, k_core(e, k=1).collect())),
+        "coreness": lambda: set(map(tuple, coreness(e).collect())),
+        "cc": lambda: set(map(tuple, connected_components(e).collect())),
+    }
+    for name, kernel in kernels.items():
+        got = {}
         for switch, over in ((6, False), (5, True)):
             monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", switch)
             cuts.clear()
-            kernel().collect()
-            assert bool(cuts) == over, switch
+            got[over] = kernel()
+            assert bool(cuts) == over, (name, switch)
+            assert cache.isEmpty(), (name, switch)
+        assert got[False] == got[True], name
 
 
 def test_ppr_mass_stays_near_sources(spark):

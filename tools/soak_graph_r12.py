@@ -26,11 +26,17 @@
    rounds and return identical target dists — the measured saving that
    justifies the two extra per-round driver actions.
 
-3. DISTRIBUTED pagerank / coreness: below graph._DRIVER_MAX_EDGES both
-   kernels run on the driver, so a benchmark-sized graph never reaches
-   their distributed loops. These ops set the switch to 0 and time the
-   distributed path on the zipfian graph, the path every graph above the
-   switch takes, so it stays measured at scale.
+3. pagerank / coreness ON BOTH SIDES OF THE SMALL-GRAPH SWITCH: below
+   graph._DRIVER_MAX_EDGES both kernels run on the driver, so a
+   benchmark-sized graph never reaches their distributed loops. These
+   ops time each kernel on the zipfian graph twice (`switch_pair`): on
+   the driver path, when the graph fits under the switch, and on the
+   distributed path with the switch set one row below the graph (at its
+   default for a graph above it), so the rejected size probe every graph
+   above the switch pays is timed too.
+   Near the switch (SOAK_M just under 1M) the pair is the evidence for
+   where the switch sits; at 10x/100x it keeps the distributed path
+   measured.
 
 Usage: python tools/soak_graph_r12.py
        SOAK_N=2000000 SOAK_M=4000000 SOAK_ALPHAS=1.1,1.5
@@ -109,6 +115,80 @@ def chain_edges(spark, n: int):
         .mapInPandas(kernel, "src long, dst long, w double")
     )
 
+
+
+def _peak_rss_mb(pid: "int | str", reset: bool = False) -> float:
+    """Peak resident set of process `pid` in MB (VmHWM); `reset` restarts
+    the peak at the current RSS (Linux clear_refs code 5)."""
+    if reset:
+        with open(f"/proc/{pid}/clear_refs", "w") as f:
+            f.write("5")
+    with open(f"/proc/{pid}/status") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("VmHWM:"))
+    return round(kb / 1024, 1)
+
+
+def switch_pair(spark, G, rows: int, run) -> dict:
+    """Time `run()` on both sides of the small-graph switch on one graph
+    whose probed frame has `rows` rows: on the driver path (the switch at
+    its default, when `rows` fits under it) and on the distributed path
+    with the switch ONE ROW below `rows` (or at its default, for a graph
+    already above it), so the run includes the rejected bounded-collect
+    probe every graph above the switch pays. On that arm the probed
+    frame is first persisted and counted (fill_s: the upstream build the
+    distributed loop needs anyway), so probe_s is the probe's own extra
+    cost, the bounded collect from the cache; on the driver arm probe_s
+    is the whole fetch. `run` returns (per-node
+    Series, stats dict); the two answers are compared. Peak RSS of the
+    driver's Python and JVM processes is reset before each arm."""
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    default, real_probe = G._DRIVER_MAX_EDGES, G._collect_small
+    probe_s: list = []
+    fill_s: list = []
+
+    def timed_probe(e):
+        if G._DRIVER_MAX_EDGES < rows:
+            t0 = time.time()
+            e.persist(G.StorageLevel.MEMORY_AND_DISK).count()
+            fill_s.append(time.time() - t0)
+        t0 = time.time()
+        try:
+            return real_probe(e)
+        finally:
+            probe_s.append(time.time() - t0)
+
+    # a graph above the switch takes the distributed path as it is
+    arms = {"driver": default, "distributed": min(default, rows - 1)}
+    res: dict = {"probed_rows": rows, "switch": default}
+    answers = {}
+    try:
+        G._collect_small = timed_probe
+        for arm, switch in arms.items():
+            if arm == "driver" and rows > default:
+                res[arm] = "skipped: graph above the switch"
+                continue
+            G._DRIVER_MAX_EDGES = switch
+            probe_s.clear()
+            fill_s.clear()
+            _peak_rss_mb("self", reset=True)
+            _peak_rss_mb(jvm_pid, reset=True)
+            t0 = time.time()
+            answers[arm], st = run()
+            res[arm] = {
+                "wall_s": round(time.time() - t0, 2),
+                "fill_s": round(sum(fill_s), 2),
+                "probe_s": round(sum(probe_s), 2),
+                "nodes": len(answers[arm]),
+                "py_peak_rss_mb": _peak_rss_mb("self"),
+                "jvm_peak_rss_mb": _peak_rss_mb(jvm_pid),
+                **st,
+            }
+    finally:
+        G._DRIVER_MAX_EDGES, G._collect_small = default, real_probe
+    if len(answers) == 2:
+        a, b = answers["driver"], answers["distributed"].reindex(answers["driver"].index)
+        res["max_abs_diff"] = float((a - b).abs().max())
+    return res
 
 
 def main() -> None:
@@ -205,24 +285,26 @@ def main() -> None:
                 f"# alpha={alpha} betweenness_weighted: {rec['betweenness_weighted']}",
                 file=sys.stderr,
             )
-        # the distributed path: small-graph switch at 0 (tool docstring, 3.)
-        driver_max, G._DRIVER_MAX_EDGES = G._DRIVER_MAX_EDGES, 0
-        try:
-            if "pagerank" in OPS:
+        if "pagerank" in OPS:
+            rows = edges.count()  # pagerank probes the raw edge list
+
+            def run_pagerank():
                 st5: dict = {}
-                t0 = time.time()
-                cnt = pagerank(edges, num_iter=10, tol=1e-9, stats=st5).count()
-                rec["pagerank"] = {"wall_s": round(time.time() - t0, 2), "nodes": cnt, **st5}
-                print(f"# alpha={alpha} pagerank: {rec['pagerank']}", file=sys.stderr)
-            if "coreness" in OPS:
-                t0 = time.time()
-                core = coreness(edges).groupBy().agg(
-                    F.count(F.lit(1)).alias("nodes"), F.max("coreness").alias("degeneracy")
-                ).first()
-                rec["coreness"] = {"wall_s": round(time.time() - t0, 2), **core.asDict()}
-                print(f"# alpha={alpha} coreness: {rec['coreness']}", file=sys.stderr)
-        finally:
-            G._DRIVER_MAX_EDGES = driver_max
+                ranks = pagerank(edges, num_iter=10, tol=1e-9, stats=st5)
+                return ranks.toPandas().set_index("node")["rank"], st5
+
+            rec["pagerank"] = switch_pair(spark, G, rows, run_pagerank)
+            print(f"# alpha={alpha} pagerank: {rec['pagerank']}", file=sys.stderr)
+        if "coreness" in OPS:
+            # coreness probes the simple undirected pairs
+            rows = G._simple_undirected(edges, "src", "dst").count()
+
+            def run_coreness():
+                core = coreness(edges).toPandas().set_index("node")["coreness"]
+                return core, {"degeneracy": int(core.max())}
+
+            rec["coreness"] = switch_pair(spark, G, rows, run_coreness)
+            print(f"# alpha={alpha} coreness: {rec['coreness']}", file=sys.stderr)
         out["alphas"][str(alpha)] = rec
         spark.stop()
 
