@@ -265,6 +265,7 @@ def contract_line(
     ndigits: int = 2,
     err_len: int = 80,
     max_errors: int | None = None,
+    per_query: bool = True,
 ) -> str:
     """The ONE stdout JSON line the driver parses. The driver records (and
     parses the contract JSON from) only the LAST 2000 characters of stdout:
@@ -276,18 +277,26 @@ def contract_line(
     separators and 2-decimal per-query rounding (bench noise is >>10ms),
     and the caller shrinks — 1-decimal timings, then 40-char error
     messages, then at most `max_errors` messages plus an `n_errors` count
-    (0 = count only) — until the line fits 1900 chars (fit_contract_line;
-    r15, ADVICE: with worst-case timings even ONE 80-char error overflowed
-    the window at both rounding levels, i.e. exactly the failure draws
-    where the contract matters most). Full-precision detail goes to
-    stderr."""
+    (0 = count only), then whole-second timings — until the line fits
+    1900 chars (fit_contract_line; r15, ADVICE: with worst-case timings
+    even ONE 80-char error overflowed the window at both rounding levels,
+    i.e. exactly the failure draws where the contract matters most).
+    `per_query=False` replaces the per-query map with its size
+    (`n_queries`), the last resort when even whole seconds overflow.
+    Full-precision detail goes to stderr."""
     out: dict = {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": {q: round(t, ndigits) for q, t in timings.items()},
-        "sf": sf_val,
     }
+    if per_query:
+        # ndigits=0 prints whole seconds as ints ("650", not "650.0")
+        out["queries"] = {
+            q: round(t, ndigits) if ndigits else round(t) for q, t in timings.items()
+        }
+    else:
+        out["n_queries"] = len(timings)
+    out["sf"] = sf_val
     if draw_elevated:
         out["draw_elevated"] = True
     if errors:
@@ -308,21 +317,26 @@ def fit_contract_line(
 ) -> str:
     """Shrink the contract line until it fits the driver's window: full
     80-char errors at 2 decimals first (the r14 shape, unchanged when it
-    fits), then progressively tighter error budgets. The last step (0
-    messages, count only) is bounded: 82 queries at 1 decimal + n_errors
-    is ~1500 chars worst-case, so the loop always terminates under 1900."""
+    fits), then progressively tighter error budgets. Three-digit timings
+    (~650 s/query) pass 1900 chars even at 1 decimal with no messages, so
+    whole seconds come next; where even those overflow (four-digit
+    timings), the last step drops the per-query map and keeps only the
+    total and the query and error counts: ~150 chars, whatever the
+    timings."""
     attempts = (
-        (2, 80, None),
-        (2, 40, None),
-        (1, 40, None),
-        (1, 40, 5),
-        (1, 0, 0),
+        (2, 80, None, True),
+        (2, 40, None, True),
+        (1, 40, None, True),
+        (1, 40, 5, True),
+        (1, 0, 0, True),
+        (0, 0, 0, True),
+        (0, 0, 0, False),
     )
     line = ""
-    for ndigits, err_len, max_errors in attempts:
+    for ndigits, err_len, max_errors, per_query in attempts:
         line = contract_line(
-            timings, errors, sf_val, draw_elevated,
-            ndigits=ndigits, err_len=err_len, max_errors=max_errors,
+            timings, errors, sf_val, draw_elevated, ndigits=ndigits,
+            err_len=err_len, max_errors=max_errors, per_query=per_query,
         )
         if len(line) <= 1900:
             return line

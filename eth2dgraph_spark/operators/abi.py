@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.keccak import keccak256_udf
+from ..functions.keccak import keccak256_hex, keccak256_udf
 
 # The 6 ERC-20 standard function signatures probed by
 # src/models/skeleton.rs:38-84 (name + input types).
@@ -126,39 +126,24 @@ def with_signatures(abi: DataFrame) -> DataFrame:
     )
 
 
-def _standard_sigs(spark, names: list[str]) -> DataFrame:
-    """Tiny reference-signature dim table (always broadcast)."""
-    from ..functions.keccak import keccak256_hex
-
-    rows = [(n, "0x" + keccak256_hex(n.encode())) for n in names]
-    return spark.createDataFrame(rows, "name string, signature string")
-
-
 def compliancy_scores(membership: DataFrame) -> DataFrame:
     """P14: per-skeleton ERC-20 (0-6) and ERC-721 (0-9) compliancy.
 
-    Join the skeleton->signature bridge (J3) against the two broadcast
-    standard-signature dims and count matches — the Spark-native form of the
-    reference's per-ABI probing loop (src/models/skeleton.rs:38-157).
+    One groupBy over the skeleton->signature bridge (J3) counts, per
+    skeleton, the function rows whose signature is in each standard list —
+    the Spark-native form of the reference's per-ABI probing loop
+    (src/models/skeleton.rs:38-157). The 15 standard signatures are hashed
+    on the driver, so the bridge is scanned once and no join is planned.
     Needs only the membership bridge (skeleton_hash, signature, type).
     """
-    spark = membership.sparkSession
-    erc20 = F.broadcast(_standard_sigs(spark, ERC20_FUNCTIONS).select("signature"))
-    erc721 = F.broadcast(_standard_sigs(spark, ERC721_FUNCTIONS).select("signature"))
-    funcs = membership.filter(F.col("type") == "function").select("skeleton_hash", "signature")
-    s20 = (
-        funcs.join(erc20, "signature")
-        .groupBy("skeleton_hash")
-        .agg(F.count(F.lit(1)).cast("int").alias("erc20_compliancy"))
-    )
-    s721 = (
-        funcs.join(erc721, "signature")
-        .groupBy("skeleton_hash")
-        .agg(F.count(F.lit(1)).cast("int").alias("erc721_compliancy"))
-    )
-    base = membership.select("skeleton_hash").distinct()
-    return (
-        base.join(s20, "skeleton_hash", "left")
-        .join(s721, "skeleton_hash", "left")
-        .fillna(0, ["erc20_compliancy", "erc721_compliancy"])
+    is_function = F.col("type") == "function"
+
+    def score(names: list[str], alias: str):
+        sigs = ["0x" + keccak256_hex(n.encode()) for n in names]
+        hit = is_function & F.col("signature").isin(sigs)
+        return F.count(F.when(hit, 1)).cast("int").alias(alias)
+
+    return membership.groupBy("skeleton_hash").agg(
+        score(ERC20_FUNCTIONS, "erc20_compliancy"),
+        score(ERC721_FUNCTIONS, "erc721_compliancy"),
     )

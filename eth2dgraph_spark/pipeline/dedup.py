@@ -193,7 +193,7 @@ def stop_shingle_postings(
     )
 
 
-def _ngram_dp(sh: DataFrame, spark) -> "int | None":
+def _ngram_dp(sh: DataFrame, spark) -> int:
     """Partition count for ngram_jaccard_pairs' pinned exchanges (the
     posting window, the intersection aggregate and the two size joins).
 
@@ -214,7 +214,11 @@ def _ngram_dp(sh: DataFrame, spark) -> "int | None":
     from 0.61 to 0.83. No pins stays 1.5-1.9x worse at c32 — the pins
     themselves are load-bearing under parallelismFirst=false. The
     count() doubles as the cache materialization of the persisted
-    shingle frame, which its first consumer paid anyway."""
+    shingle frame, which its first consumer paid anyway.
+
+    Eager: the count runs on every ngram_jaccard_pairs call, including
+    eager=False ones, because the pinned widths are part of the plan that
+    call returns."""
     from ..graph import _size_partitions
 
     return _size_partitions(sh.count(), spark)
@@ -236,7 +240,8 @@ def ngram_jaccard_pairs(
     `eager` (default) materializes the output and releases the persisted
     shingle frame before returning; False returns the lazy plan (for plan
     inspection or custom reuse) and leaves the shingle frame persisted
-    until the session's ContextCleaner or an explicit unpersist.
+    until the session's ContextCleaner or an explicit unpersist. Either
+    way the shingle count that sizes the exchanges runs (_ngram_dp).
 
     Scale shape: (1) per-doc sizes are counted BEFORE any pruning; (2)
     candidate pairs come from ONE groupBy(shingle-hash) with an in-row
@@ -280,7 +285,9 @@ def ngram_jaccard_pairs(
     # under the flag without the pin). REPARTITION_BY_NUM is exempt from
     # coalescing, replaces the ENSURE_REQUIREMENTS exchange the window /
     # posting groupBy inserted anyway (same key, so the partitioning is
-    # reused downstream). dp derivation lives in _ngram_dp (r15).
+    # reused downstream). dp derivation lives in _ngram_dp (r15); the
+    # falsy arm serves tools/measure_r15_ngram.py's no-pin A/B arm, which
+    # monkeypatches _ngram_dp to return None.
     dp = _ngram_dp(sh, df.sparkSession)
     posting_src = sh.repartition(dp, "h") if dp else sh
     if max_shingle_docs is not None:

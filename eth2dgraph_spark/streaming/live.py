@@ -9,12 +9,18 @@ Reference semantics re-expressed:
       -> backfill_then_live(): a bounded batch job over the missing range
          first, then the stream starts from the backfill ceiling.
   T3  exactly-once per block via delete-then-reinsert
-      -> idempotent dynamic partition overwrite keyed on the block bucket;
-         replaying a micro-batch rewrites the same partitions with the same
-         rows (src/models/block.rs:171-284 without per-row transactions).
+      -> idempotent dynamic partition overwrite keyed on the block bucket:
+         the batch's block keys are collected to the driver (at most one
+         row per batch block), the touched buckets' surviving rows are read
+         back through a partition-pruned filter, and both are rewritten
+         together. Replaying a micro-batch rewrites the same partitions
+         with the same rows (src/models/block.rs:171-284 without per-row
+         transactions).
   T4  reorg signal: Log.removed carried through -> kept as a column; a
-      reorged block re-enters as a new row for the same number and its
-      partition is overwritten.
+      reorged block re-enters as new rows for the same number and its
+      partition is overwritten. Passing the batch's block numbers as
+      `blocks` also deletes the old rows of a reorged block whose new
+      version has none in that table.
   T5  skeleton dedup state across the stream -> anti-join each batch's
       skeletons against the already-written skeleton table (the stateless,
       rescalable version of the DashMap at src/extraction/stream.rs:184-246).
@@ -26,12 +32,17 @@ streaming share one code path.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.eth import BLOCK_BUCKET_COL, read_eth_table, with_block_bucket
+from ..sources.eth import (
+    BLOCK_BUCKET_COL,
+    BLOCK_BUCKET_SIZE,
+    read_eth_table,
+    with_block_bucket,
+)
 
 
 def _read_sink_or_none(spark: SparkSession, table: str, base_path: str):
@@ -63,6 +74,7 @@ def process_block_batch(
     base_path: str,
     table: str,
     block_col: str = "block_number",
+    blocks: Iterable[int] | None = None,
 ) -> None:
     """T3: idempotent write of one micro-batch with PER-BLOCK
     delete-then-reinsert semantics (src/models/block.rs:171-284).
@@ -71,21 +83,36 @@ def process_block_batch(
     WHOLESALE, so the batch's rows alone must never be the new bucket
     contents: a micro-batch covering part of a bucket would silently delete
     every other block already in it. The surviving rows of each touched
-    bucket (blocks NOT in this batch) are read back, lineage-cut with an
-    eager localCheckpoint (Spark refuses to overwrite a path it is still
-    reading), and rewritten together with the batch. Replaying the same
-    batch is a no-op rewrite; reorg re-processing replaces exactly that
-    block's rows. (On a transactional table format — Delta/Iceberg — this
-    whole dance is a MERGE; parquet-only sinks pay the bucket rewrite.)
+    bucket (blocks NOT replaced by this batch) are read back, lineage-cut
+    with an eager localCheckpoint (Spark refuses to overwrite a path it is
+    still reading), and rewritten together with the batch. Replaying the
+    same batch is a no-op rewrite. (On a transactional table format —
+    Delta/Iceberg — this whole dance is a MERGE; parquet-only sinks pay
+    the bucket rewrite.)
 
-    Costs, stated plainly: every micro-batch reads back and rewrites ALL
-    surviving rows of every touched bucket, so per-batch cost grows with
-    bucket fill (bounded by bucket size x touched buckets, never by table
-    size). The eager localCheckpoint lives in UNREPLICATED executor
-    storage: losing an executor between checkpoint and write fails the
-    batch (Structured Streaming then replays it — correctness holds, one
-    batch of latency is lost). Production alternatives: reliable
-    checkpoint() to HDFS/S3, or a staging-path write-then-swap."""
+    `blocks` names the block numbers this micro-batch replaces. When given,
+    EVERY stored row of those blocks is deleted, including blocks the
+    batch has no rows for: a reorged block whose new version carries no
+    transactions loses its old ones (T4). Every batch row must then lie in
+    `blocks`; a row outside it would overwrite its bucket without that
+    bucket's surviving rows. When omitted, the replaced blocks are those
+    that appear in `batch` — a block absent from this table's rows keeps
+    whatever the sink already holds for it.
+
+    Costs, stated plainly: without `blocks`, one driver collect of the
+    batch's distinct (bucket, block) keys — at most one row per batch
+    block — names the touched buckets; with `blocks` the buckets follow
+    from the numbers and that job is skipped. The read-back is then one
+    filter on the bucket partition column (pruned to the touched
+    partitions) and the block column, checkpointed eagerly. Every
+    micro-batch still rewrites ALL surviving rows of every touched bucket,
+    so per-batch cost grows with bucket fill (bounded by bucket size x
+    touched buckets, never by table size). The eager localCheckpoint lives
+    in UNREPLICATED executor storage: losing an executor between
+    checkpoint and write fails the batch (Structured Streaming then
+    replays it — correctness holds, one batch of latency is lost).
+    Production alternatives: reliable checkpoint() to HDFS/S3, or a
+    staging-path write-then-swap."""
     spark = batch.sparkSession
     out = with_block_bucket(batch, block_col)
     path = f"{base_path}/{table}"
@@ -99,13 +126,18 @@ def process_block_batch(
         else:
             raise
     if existing is not None:
-        touched = out.select(BLOCK_BUCKET_COL).distinct()
-        keep = (
-            existing.join(F.broadcast(touched), BLOCK_BUCKET_COL, "left_semi")
-            .join(out.select(block_col).distinct(), block_col, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        out = keep.unionByName(out)
+        if blocks is None:
+            keys = out.select(BLOCK_BUCKET_COL, block_col).distinct().collect()
+            keys = [k for k in keys if k[1] is not None]
+        else:
+            keys = [(int(b) // BLOCK_BUCKET_SIZE, int(b)) for b in blocks]
+        if keys:
+            buckets = sorted({k[0] for k in keys})
+            replaced = sorted({k[1] for k in keys})
+            keep = existing.filter(
+                F.col(BLOCK_BUCKET_COL).isin(buckets) & ~F.col(block_col).isin(replaced)
+            ).localCheckpoint(eager=True)
+            out = keep.unionByName(out)
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -81,6 +81,29 @@ def test_contract_line_fits_with_errors_worst_case():
         assert set(parsed["queries"]) == set(timings)
 
 
+def test_contract_line_650s_per_query_fits():
+    # ~650 s/query: the 1-decimal map of every headline query passes 1900
+    # chars, with or without errors. Whole seconds fit; four-digit timings
+    # overflow even those, and the last fallback drops the map, keeping the
+    # total and the counts.
+    for t, keeps_map in ((650.123, True), (9999.9, False)):
+        timings = {q: t for q in bench.HEADLINE}
+        assert len(bench.contract_line(timings, {}, 0.1, True, ndigits=1)) > 1900
+        for errors in ({}, {bench.HEADLINE[0]: "e" * 500}):
+            line = _shrunk_line(timings, errors=errors, elevated=True)
+            assert len(line) <= 1900, (t, len(line))
+            parsed = json.loads(line)
+            if keeps_map:
+                assert parsed["queries"]["gas_stats"] == round(t)
+                assert "n_queries" not in parsed
+            else:
+                assert "queries" not in parsed
+                assert parsed["n_queries"] == len(bench.HEADLINE)
+            assert parsed["value"] == round(t * len(bench.HEADLINE), 3)
+            assert parsed["draw_elevated"] is True
+            assert parsed.get("n_errors", 0) == len(errors)
+
+
 def test_detect_elevated_on_archived_host_steal_draws():
     # the r13 documented receipt: 40+ diffuse highs at 1.16-1.77x, no
     # single-query outlier

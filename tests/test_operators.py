@@ -186,6 +186,8 @@ def test_compliancy_scores(spark):
     rows = [("0xsk1", s, "function") for s in erc20_sigs]  # full ERC-20: 6/6
     rows += [("0xsk2", erc20_sigs[2], "function")]  # transfer only: 1/6
     rows += [("0xsk3", "0xdeadbeef", "event")]
+    # an event row carrying an ERC-20 function signature is not a function
+    rows += [("0xsk4", erc20_sigs[1], "event")]
     df = spark.createDataFrame(rows, "skeleton_hash string, signature string, type string")
     got = {r["skeleton_hash"]: r for r in abi_ops.compliancy_scores(df).collect()}
     assert got["0xsk1"]["erc20_compliancy"] == 6
@@ -193,6 +195,8 @@ def test_compliancy_scores(spark):
     assert got["0xsk1"]["erc721_compliancy"] == 3
     assert got["0xsk2"]["erc20_compliancy"] == 1
     assert got["0xsk3"]["erc20_compliancy"] == 0
+    assert got["0xsk4"]["erc20_compliancy"] == 0
+    assert got["0xsk4"]["erc721_compliancy"] == 0
 
 
 def test_distinct_skeletons_first_wins(spark):
