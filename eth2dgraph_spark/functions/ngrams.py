@@ -148,9 +148,15 @@ def ngram_rows(
             "than 8 opcode bytes into int64 is not injective"
         )
     udf = _packed_ngram_udf(n) if packed else _ngram_udf(n)
+    # explode_outer + a null filter, not explode: under an inner explode
+    # Catalyst infers a size(_ngrams) > 0 filter below the Generate, and
+    # that filter evaluates the pandas UDF a second time in its own
+    # ArrowEvalPython. The UDF's arrays hold no nulls, so the rows are the
+    # same.
     return (
         skeletons.select(F.col(id_col).alias("id"), udf(F.col(code_col)).alias("_ngrams"))
-        .select("id", F.explode("_ngrams").alias("ngram"))
+        .select("id", F.explode_outer("_ngrams").alias("ngram"))
+        .filter(F.col("ngram").isNotNull())
         .groupBy("id", "ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

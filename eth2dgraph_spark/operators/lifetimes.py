@@ -20,18 +20,30 @@ from pyspark.sql import functions as F
 
 
 def per_contract_lifecycle(deployments: DataFrame, destructions: DataFrame) -> DataFrame:
-    """One row per contract: deploy/destroy counts and block extrema (W3)."""
-    dep = deployments.groupBy("contract").agg(
-        F.count(F.lit(1)).alias("deploy_count"),
-        F.min("block_number").alias("first_deploy_block"),
-        F.max("block_number").alias("last_deploy_block"),
+    """One row per deployed contract: deploy/destroy counts and block
+    extrema (W3). One groupBy over a tagged union of both event kinds.
+    Contracts never deployed are dropped. Destructions of a null contract
+    are not counted: a deployed null contract has destroy_count = 0 and
+    null destroy blocks, as under an equi-join on `contract`."""
+    dep = F.col("_dep")
+    block = F.col("block_number")
+    events = deployments.select("contract", "block_number", F.lit(True).alias("_dep")).unionByName(
+        destructions.filter(F.col("contract").isNotNull()).select(
+            "contract", "block_number", F.lit(False).alias("_dep")
+        )
     )
-    des = destructions.groupBy("contract").agg(
-        F.count(F.lit(1)).alias("destroy_count"),
-        F.min("block_number").alias("first_destroy_block"),
-        F.max("block_number").alias("last_destroy_block"),
+    return (
+        events.groupBy("contract")
+        .agg(
+            F.count(F.when(dep, 1)).alias("deploy_count"),
+            F.min(F.when(dep, block)).alias("first_deploy_block"),
+            F.max(F.when(dep, block)).alias("last_deploy_block"),
+            F.count(F.when(~dep, 1)).alias("destroy_count"),
+            F.min(F.when(~dep, block)).alias("first_destroy_block"),
+            F.max(F.when(~dep, block)).alias("last_destroy_block"),
+        )
+        .filter(F.col("deploy_count") > 0)
     )
-    return dep.join(des, "contract", "left").fillna(0, ["destroy_count"])
 
 
 def rq1_destroyed_vs_not(lifecycle: DataFrame) -> DataFrame:
@@ -49,20 +61,24 @@ def rq2_destroyed_once_vs_multiple(lifecycle: DataFrame) -> DataFrame:
 
 
 def rq3_same_block_tx(deployments: DataFrame, destructions: DataFrame) -> DataFrame:
-    """J8/A10: deploy x destroy pairs per contract, same-block and same-tx."""
+    """J8/A10: deploy x destroy pairs per contract, same-block and same-tx.
+    One per-contract count of matching pairs, then one global sum; the
+    sums are coalesced so empty input still returns one row of zeros."""
     dep = deployments.select("contract", F.col("block_number").alias("dep_block"), F.col("tx_hash").alias("dep_tx"))
     des = destructions.select("contract", F.col("block_number").alias("des_block"), F.col("tx_hash").alias("des_tx"))
-    pairs = dep.join(des, "contract")
-    same_block = pairs.filter(F.col("dep_block") == F.col("des_block"))
-    same_tx = pairs.filter(F.col("dep_tx") == F.col("des_tx"))
-    return same_block.agg(
-        F.count(F.lit(1)).alias("same_block_pairs"),
-        F.countDistinct("contract").alias("same_block_contracts"),
-    ).crossJoin(
-        same_tx.agg(
-            F.count(F.lit(1)).alias("same_tx_pairs"),
-            F.countDistinct("contract").alias("same_tx_contracts"),
+    per_contract = (
+        dep.join(des, "contract")
+        .groupBy("contract")
+        .agg(
+            F.count(F.when(F.col("dep_block") == F.col("des_block"), 1)).alias("_block"),
+            F.count(F.when(F.col("dep_tx") == F.col("des_tx"), 1)).alias("_tx"),
         )
+    )
+    return per_contract.agg(
+        F.coalesce(F.sum("_block"), F.lit(0)).alias("same_block_pairs"),
+        F.count(F.when(F.col("_block") > 0, 1)).alias("same_block_contracts"),
+        F.coalesce(F.sum("_tx"), F.lit(0)).alias("same_tx_pairs"),
+        F.count(F.when(F.col("_tx") > 0, 1)).alias("same_tx_contracts"),
     )
 
 

@@ -18,7 +18,7 @@ and is the piece that survives 100x data (cross join does not).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_COSINE_THRESHOLD = 0.95  # src/main.rs:126-131
@@ -35,6 +35,46 @@ DEFAULT_JACCARD_THRESHOLD = 0.75  # src/main.rs:121-125
 DEFAULT_MAX_POSTING = 1024
 
 
+def _capped(rows: DataFrame, key: str, max_posting_len: int | None) -> DataFrame:
+    """Rows whose posting key is shared by 2..max_posting_len ids (all rows
+    when the cap is None).
+
+    The cap is enforced BEFORE collect_list: collect_list's per-group
+    buffer never spills, so a hot posting would otherwise materialize its
+    full O(f) array in one task before a size filter could drop it — the
+    buffer form of the reducer hazard the cap exists to prevent. The
+    posting length comes from a WINDOW over the posting key (WindowExec
+    spills per group), not a count agg + semi-join: the input is not
+    persisted here, and the window consumes it ONCE, with the caller's
+    groupBy reusing the window's hash partitioning (no extra exchange).
+    (dedup.ngram_jaccard_pairs uses the agg+semi-join form instead — its
+    shingle frame is persisted, so re-reads there are cache hits.)"""
+    if max_posting_len is None:
+        return rows
+    dc = F.count(F.lit(1)).over(Window.partitionBy(key))
+    return (
+        rows.withColumn("_dc", dc)
+        .filter((F.col("_dc") > 1) & (F.col("_dc") <= max_posting_len))
+        .drop("_dc")
+    )
+
+
+def _triangle(posting: str, pair):
+    """Explode each sorted posting list into its triangular pairs: element
+    i against elements i+1.. — no self-join of the index, no j<=i half
+    ever materialized. `pair(x, y)` builds the struct for one pair."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                posting,
+                lambda x, i: F.transform(
+                    F.slice(posting, i + 2, F.size(posting)), lambda y: pair(x, y)
+                ),
+            )
+        )
+    ).alias("p")
+
+
 def cosine_similarity_pairs(
     ngram_rows: DataFrame,
     threshold: float = DEFAULT_COSINE_THRESHOLD,
@@ -42,70 +82,48 @@ def cosine_similarity_pairs(
 ) -> DataFrame:
     """A6/J5: all pairs with n-gram cosine >= threshold.
 
-    Input: (id, ngram, cnt) rows from functions.ngrams.ngram_rows.
-    Norms via a per-id agg; dot(a,b) from ONE groupBy(ngram-hash) whose
-    sorted posting list is expanded in-row to triangular (id_a, id_b,
-    cnt_a*cnt_b) contributions — no self-join of the index, no j<=i half
-    ever materialized (vs. the reference's rayon loop,
-    similarities.rs:256-305). `max_posting_len` (finite BY DEFAULT) caps
-    the expansion; pass None for exact scores on bounded inputs.
+    Input: (id, ngram, cnt) rows from functions.ngrams.ngram_rows, read
+    ONCE. Each row carries its id's squared norm (a window over id, on the
+    FULL vector) into its posting entry; dot(a,b) comes from ONE
+    groupBy(ngram-hash) whose sorted posting list is expanded in-row to
+    triangular (id_a, id_b, cnt_a*cnt_b) contributions (vs. the
+    reference's rayon loop, similarities.rs:256-305), and the norms ride
+    along to the final score, so no norms aggregation is joined back.
+    The window costs one more shuffle of the n-gram rows; a second read
+    of them would re-run the n-gram pandas UDF (a join-inferred
+    isnotnull filter keeps the two reads from sharing an exchange).
+    `max_posting_len` (finite BY DEFAULT) caps the expansion; pass None for
+    exact scores on bounded inputs.
     """
-    norms = ngram_rows.groupBy("id").agg(F.sum(F.col("cnt") * F.col("cnt")).alias("norm2"))
-    # norms are computed on the FULL vectors above; n-grams private to one
-    # skeleton can't contribute to any dot product, so postings of length 1
-    # are dropped, and the grouping key is a 64-bit hash, never the string.
-    nr = ngram_rows.select(F.xxhash64("ngram").alias("ngram"), F.struct("id", "cnt").alias("e"))
-    # the cap is enforced BEFORE collect_list: collect_list's per-group
-    # buffer never spills, so a hot posting would otherwise materialize its
-    # full O(f) array in one task before the size filter could drop it —
-    # the buffer form of the reducer hazard the cap exists to prevent. The
-    # posting length comes from a WINDOW over the posting key (WindowExec
-    # spills per group), not a count agg + semi-join: ngram_rows is not
-    # persisted here, and the window consumes it ONCE, with the groupBy
-    # below reusing the window's hash partitioning (no extra exchange).
-    # (dedup.ngram_jaccard_pairs uses the agg+semi-join form instead —
-    # its shingle frame is persisted, so re-reads there are cache hits.)
-    posting_src = nr
-    if max_posting_len is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("ngram")
-        posting_src = (
-            nr.withColumn("_dc", F.count(F.lit(1)).over(w))
-            .filter((F.col("_dc") > 1) & (F.col("_dc") <= max_posting_len))
-            .drop("_dc")
-        )
+    # n-grams private to one skeleton can't contribute to any dot product,
+    # so postings of length 1 are dropped, and the grouping key is a 64-bit
+    # hash, never the string.
+    norm2 = F.sum(F.col("cnt") * F.col("cnt")).over(Window.partitionBy("id"))
+    nr = ngram_rows.select(
+        F.xxhash64("ngram").alias("ngram"), F.struct("id", "cnt", norm2.alias("norm2")).alias("e")
+    )
     posting = (
-        posting_src.groupBy("ngram")
+        _capped(nr, "ngram", max_posting_len)
+        .groupBy("ngram")
         .agg(F.sort_array(F.collect_list("e")).alias("es"))  # sorts by id
         .filter(F.size("es") > 1)  # no-op under the window filter; needed for None
     )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "es",
-                lambda x, i: F.transform(
-                    F.slice("es", i + 2, F.size("es")),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        (x["cnt"] * y["cnt"]).alias("prod"),
-                    ),
-                ),
-            )
-        )
-    ).alias("p")
-    dots = (
-        posting.select(pair)
-        .select("p.id_a", "p.id_b", "p.prod")
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("prod").alias("dot"))
+    pair = _triangle(
+        "es",
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["norm2"].alias("norm2_a"),
+            y["norm2"].alias("norm2_b"),
+            (x["cnt"] * y["cnt"]).alias("prod"),
+        ),
     )
-    na = norms.select(F.col("id").alias("id_a"), F.col("norm2").alias("norm2_a"))
-    nb = norms.select(F.col("id").alias("id_b"), F.col("norm2").alias("norm2_b"))
     return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
+        posting.select(pair)
+        .select("p.*")
+        # norm2 is a function of the id, so grouping on it splits nothing
+        .groupBy("id_a", "id_b", "norm2_a", "norm2_b")
+        .agg(F.sum("prod").alias("dot"))
         .withColumn("similarity", F.col("dot") / F.sqrt(F.col("norm2_a") * F.col("norm2_b")))
         .filter(F.col("similarity") >= threshold)
         .select("id_a", "id_b", "similarity")
@@ -123,40 +141,24 @@ def jaccard_similarity_pairs(
     similarities.rs:94-103 — or any token sets). |A∩B| from the join,
     |A∪B| = |A|+|B|-|A∩B|. Empty sets produce no rows => 0.0 (:233-234).
     `max_posting_len` caps the hot-token expansion (see DEFAULT_MAX_POSTING).
+
+    The set sizes are joined back, not carried in the posting entries as
+    the cosine kernel carries its norms: there is no UDF to re-run here
+    (the sizes and the postings share one exchange of the distinct
+    tokens), and carrying the sizes through the pair expansion, which
+    adds a shuffle of every token row by id, measured slower: 231 vs
+    175 s on the exact sf0.1 interface_jaccard gate (4 cores, one run
+    each), best-of-3 1.98 vs 1.34 s capped at sf0.01.
     """
     tok = token_rows.select("id", F.xxhash64("token").alias("token")).distinct()
     sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    # sizes fixed above -> singleton tokens prune away; pairs come from the
-    # sorted posting list of each token (same shape as the cosine path).
-    # Cap enforced BEFORE collect_list via a window — see
-    # cosine_similarity_pairs for the per-group-buffer rationale and the
-    # window-vs-semi-join choice.
-    posting_src = tok
-    if max_posting_len is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("token")
-        posting_src = (
-            tok.withColumn("_dc", F.count(F.lit(1)).over(w))
-            .filter((F.col("_dc") > 1) & (F.col("_dc") <= max_posting_len))
-            .drop("_dc")
-        )
     posting = (
-        posting_src.groupBy("token")
+        _capped(tok, "token", max_posting_len)
+        .groupBy("token")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)  # no-op under the window filter; needed for None
     )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ids",
-                lambda x, i: F.transform(
-                    F.slice("ids", i + 2, F.size("ids")),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-    ).alias("p")
+    pair = _triangle("ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")))
     inter = (
         posting.select(pair)
         .select("p.id_a", "p.id_b")

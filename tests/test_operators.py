@@ -243,6 +243,25 @@ def test_lifetimes_rq3(spark, lifecycle_frames):
     assert rq3["same_tx_pairs"] == 1 and rq3["same_tx_contracts"] == 1
 
 
+def test_lifetimes_edge_rules(spark, lifecycle_frames):
+    # a contract destroyed but never deployed is dropped; a deployed null
+    # contract keeps destroy_count 0 even when null destructions exist;
+    # rq3 over empty input is one row of zeros
+    deps, dess = lifecycle_frames
+    schema = "contract string, block_number long, tx_hash string"
+    deps = deps.unionByName(spark.createDataFrame([(None, 30, "tn")], schema))
+    dess = dess.unionByName(spark.createDataFrame([(None, 31, "tn"), ("c9", 40, "t9")], schema))
+    lc = {r["contract"]: r for r in lifetimes.per_contract_lifecycle(deps, dess).collect()}
+    assert set(lc) == {"c1", "c2", "c3", "c4", "c5", None}
+    assert lc[None]["deploy_count"] == 1 and lc[None]["destroy_count"] == 0
+    assert lc[None]["first_destroy_block"] is None
+    assert (lc["c3"]["destroy_count"], lc["c3"]["first_destroy_block"], lc["c3"]["last_destroy_block"]) == (2, 6, 8)
+    empty = deps.limit(0)
+    assert lifetimes.rq3_same_block_tx(empty, empty).collect()[0].asDict() == {
+        "same_block_pairs": 0, "same_block_contracts": 0, "same_tx_pairs": 0, "same_tx_contracts": 0,
+    }
+
+
 def test_lifetimes_rq4(spark, lifecycle_frames):
     deps, dess = lifecycle_frames
     lc = lifetimes.per_contract_lifecycle(deps, dess)

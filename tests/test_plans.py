@@ -193,8 +193,23 @@ def test_triangular_pairs_in_similarity(spark):
     assert [(r["id_a"], r["id_b"]) for r in got] == [("a", "b")]  # one direction only
     p = plan_of(cosine_similarity_pairs(rows, 0.5), "simple")
     joins = p.count("SortMergeJoin") + p.count("ShuffledHashJoin") + p.count("BroadcastHashJoin")
-    # LeftSemi = the cap's eligible-key pre-drop, not a pair-generating join
-    assert joins - p.count("LeftSemi") <= 2  # only the two norm lookups
+    # the norms ride in the posting entries: no pair join, no norm lookup
+    assert joins == 0
+
+
+def test_ngram_udf_evaluated_once_per_plan(spark):
+    """The n-gram pandas UDF runs in ONE ArrowEvalPython: no Catalyst-
+    inferred filter under the explode clones it, and the cosine kernel
+    reads its n-gram rows once (norms travel with the postings)."""
+    from eth2dgraph_spark.functions.ngrams import ngram_rows
+    from eth2dgraph_spark.operators.similarity import cosine_similarity_pairs
+
+    df = spark.createDataFrame(
+        [("a", "0x6001600201"), ("b", "0x60016002016003")], "skeleton_hash string, bytecode string"
+    )
+    ng = ngram_rows(df, n=2)
+    assert plan_of(ng, "simple").count("ArrowEvalPython") == 1
+    assert plan_of(cosine_similarity_pairs(ng, 0.5), "simple").count("ArrowEvalPython") == 1
 
 
 def test_disjunctive_predicate_pushes_to_scan(spark):

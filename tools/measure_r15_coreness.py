@@ -76,56 +76,10 @@ def main() -> None:
             out = out.unionByName(extra)
         return out.select(F.col("u").alias("node"), F.col("coreness").cast("long"))
 
-    def keep_persist_coreness(edges, max_k=None, rounds_per_layer=None, max_iters=50,
-                              src="src", dst="dst", checkpoint_dir=None):
-        """legacy per-round cuts + keep.persist() so the two broadcast
-        semi-join builds share ONE degree-agg execution per round (the
-        r14 k_core keep-persist, applied to the fixed-shape branch)."""
-        from pyspark.storagelevel import StorageLevel
-
-        e = (
-            G._canonical_undirected(edges, src, dst)
-            .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-            .distinct()
-        )
-        doubled = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        cur = G._truncator(doubled, checkpoint_dir)
-        nodes_prev = cur.select("u").distinct()
-        layers = []
-        k = 1
-        while True:
-            k += 1
-            for _ in range(rounds_per_layer):
-                deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-                keep = deg.filter(F.col("deg") >= k).select("u").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                cur = G._truncator(
-                    cur.join(keep, "u", "left_semi").join(
-                        keep.select(F.col("u").alias("v")), "v", "left_semi"
-                    ),
-                    checkpoint_dir,
-                )
-                keep.unpersist()
-            nodes_now = cur.select("u").distinct()
-            layers.append(
-                nodes_prev.join(nodes_now, "u", "left_anti").withColumn(
-                    "coreness", F.lit(k - 1)
-                )
-            )
-            nodes_prev = nodes_now
-            if k == max_k:
-                layers.append(nodes_now.withColumn("coreness", F.lit(max_k)))
-                break
-        out = layers[0]
-        for extra in layers[1:]:
-            out = out.unionByName(extra)
-        return out.select(F.col("u").alias("node"), F.col("coreness").cast("long"))
-
     # "fused" (round-pair persist+checkpoint) measured 10.16 vs legacy 9.88
     # best-of-3 interleaved -> REJECTED; arm removed. `current` is whatever
     # the module ships (compare it against the reconstructed variants).
-    arms = {"current": current, "legacy": legacy_coreness, "keepp": keep_persist_coreness}
+    arms = {"current": current, "legacy": legacy_coreness}
 
     def run(name):
         spark.sparkContext.setJobDescription(name)
